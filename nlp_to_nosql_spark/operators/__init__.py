@@ -9,7 +9,6 @@ from nlp_to_nosql_spark.operators.ivf import IVFIndex
 from nlp_to_nosql_spark.operators.joins import salted_join
 from nlp_to_nosql_spark.operators.sessions import sessionize, sessionize_stream
 from nlp_to_nosql_spark.operators.similarity import (
-    RandomHyperplaneLSH,
     embedding_neardup_exact,
     topk_batch,
     topk_bruteforce,
@@ -25,7 +24,6 @@ __all__ = [
     "salted_join",
     "sessionize",
     "sessionize_stream",
-    "RandomHyperplaneLSH",
     "embedding_neardup_exact",
     "topk_batch",
     "topk_bruteforce",

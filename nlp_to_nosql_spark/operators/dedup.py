@@ -108,7 +108,7 @@ def shingle_arrays(
     """(id, ``_sh`` array<string>) — each row's DISTINCT k-word shingle
     set as an array attribute, the shared frontier of the shingle-based
     pair generators: :func:`shingle_table` explodes it,
-    :func:`minhash_signatures` / :func:`minhash_signatures_md5` fold it.
+    :func:`minhash_signatures_md5` folds it.
     Callers that run SEVERAL generators over the same frame (the
     eval11/eval12 precision-recall measurements) build this once,
     persist it, and pass it via the generators' ``shingle_arrays``
@@ -280,7 +280,7 @@ def md5_hash60(c: Column) -> Column:
     """60-bit integer hash from the first 15 hex chars of md5 — slower
     than xxhash64 but exactly reproducible in DuckDB
     (``CAST('0x'||substr(md5(x),1,15) AS UBIGINT)``), which is what lets
-    the md5-family minhash/simhash variants carry value-level oracles."""
+    the md5-derived signatures and sketches carry value-level oracles."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
@@ -306,16 +306,25 @@ def minhash_signatures_md5(
     num_perm: int = 64,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
-    """Oracle-reproducible minhash signatures: ONE md5 per shingle, then
-    ``num_perm`` arithmetic permutations of the 28-bit base — versus the
-    xxhash64 family's hash-per-(shingle × permutation).  That is the
-    cost shape a 100 TB minhash pass wants (the hash is the expensive
-    part; the permutations are mul-adds), and every step is integer
-    arithmetic DuckDB replays exactly.  The base hashes live in their
-    own projection so the permutation lambda references an attribute
-    array, not a re-hashed subexpression.  ``shingle_arrays`` (a
-    prebuilt :func:`shingle_arrays` frame for the same ``df``/``k``)
-    skips the tokenize+shingle pass."""
+    """(id, sig array<long>) — oracle-reproducible minhash signatures:
+    ONE md5 per shingle, then ``num_perm`` arithmetic permutations of the
+    28-bit base.  That is the cost shape a 100 TB minhash pass wants
+    (the hash is the expensive part; the permutations are mul-adds —
+    measured faster than an xxhash64 per (shingle × permutation),
+    PERFORMANCE.md), and every step is integer arithmetic DuckDB
+    replays exactly.  The base hashes live in their own projection so
+    the permutation lambda references an attribute array, not a
+    re-hashed subexpression.
+    ``shingle_arrays`` (a prebuilt :func:`shingle_arrays` frame for the
+    same ``df``/``k``) skips the tokenize+shingle pass.
+
+    Shuffle-free per-row fold: the signature is an ``aggregate`` over the
+    document's distinct base-hash array, zip-merging a ``num_perm``-long
+    running-min vector with each shingle's permuted hashes.  A
+    document's signature never leaves its scan partition — at 100 TB the
+    minhash stage adds zero shuffle.  (64 min-aggs over an exploded form
+    generate pathological whole-stage code; the fold is ~5× faster on a
+    cold plan and equal warm.)"""
     base = shingle_arrays
     if base is None:
         base = tokenized(df, id_col, text_col).select(
@@ -347,57 +356,6 @@ def minhash_signatures_md5(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_perm: int = 64,
-    hash_fn=None,
-    shingle_arrays: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig array<long>) — one xxhash64 family member per permutation.
-    ``hash_fn`` overrides the string→long hash (default ``F.xxhash64``;
-    pass :func:`md5_hash60` for the oracle-reproducible family).
-
-    Shuffle-free per-row fold: the signature is an ``aggregate`` over the
-    document's distinct shingle array, zip-merging a 64-long running-min
-    vector with each shingle's 64 permuted hashes.  A document's signature
-    never leaves its scan partition — at 100 TB the minhash stage adds
-    zero shuffle.  (An earlier measurement had the explode + 64-min-agg
-    groupBy form 7× faster, but that was confounded by the tokenization
-    recompute fixed in :func:`shingles_of_words`; with tokens as an
-    attribute, the fold form is ~5× faster on a cold plan — 64 min-aggs
-    generate pathological whole-stage code — and equal warm.)
-    """
-    hasher = hash_fn if hash_fn is not None else F.xxhash64
-    sh = shingle_arrays
-    if sh is None:
-        sh = tokenized(df, id_col, text_col).select(
-            F.col(id_col),
-            F.array_distinct(shingles_of_words(F.col("_words"), k)).alias(
-                "_sh"
-            ),
-        )
-    return sh.select(
-        F.col(id_col),
-        F.aggregate(
-            F.col("_sh"),
-            F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_perm),
-            lambda acc, s: F.zip_with(
-                acc,
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(num_perm - 1)),
-                    lambda i: hasher(
-                        F.concat(F.lit("perm"), i.cast("string"), F.lit(":"), s)
-                    ),
-                ),
-                lambda a, h: F.least(a, h),
-            ),
-        ).alias("sig"),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -406,7 +364,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    sig_fn=None,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH + signature-level verification.
@@ -414,12 +371,12 @@ def minhash_lsh_pairs(
     ``bands`` bands of ``num_perm // bands`` rows; a pair is a candidate if
     any band hashes equal (probability ≈ 1-(1-j^r)^b).  Candidates are
     verified by estimated Jaccard = fraction of agreeing minhashes, so the
-    full shingle sets are never rejoined.  ``sig_fn`` selects the
-    signature family (default :func:`minhash_signatures`; pass
-    :func:`minhash_signatures_md5` for the oracle-reproducible form).
-    ``shingle_arrays`` (a prebuilt :func:`shingle_arrays` frame for the
-    same ``df``/``k``) is forwarded to the signature builder so the
-    tokenize+shingle pass is shared with other generators.
+    full shingle sets are never rejoined.  Signatures are
+    :func:`minhash_signatures_md5`, so the DuckDB oracle replays the
+    whole pipeline.  ``shingle_arrays`` (a prebuilt
+    :func:`shingle_arrays` frame for the same ``df``/``k``) is forwarded
+    to the signature builder so the tokenize+shingle pass is shared with
+    other generators.
     """
     if bands <= 0 or bands > num_perm or num_perm % bands:
         # bands > num_perm would make every band slice empty — one global
@@ -433,7 +390,7 @@ def minhash_lsh_pairs(
     # Narrow (id + num_perm longs), reused by banding and verification:
     # memory with disk spillover (conf-overridable).
     sig = persisted(
-        (sig_fn or minhash_signatures)(
+        minhash_signatures_md5(
             df, id_col, text_col, k, num_perm, shingle_arrays=shingle_arrays
         ),
         "signatures",
@@ -506,43 +463,15 @@ def minhash_lsh_pairs(
 # SimHash near-dup
 # ---------------------------------------------------------------------------
 
-#: SQL-lambda form because the Python ``shiftright`` wrapper only takes a
-#: literal int shift; SQL ``shiftright(expr, expr)`` shifts by a column.
-_SIMHASH_SQL = """
-aggregate(
-  zip_with(
-    aggregate(
-      transform(split(regexp_replace(lower(trim({c})), '\\\\s+', ' '), ' '),
-                t -> xxhash64(t)),
-      array_repeat(0, 64),
-      (acc, h) -> zip_with(acc, sequence(0, 63),
-                           (a, i) -> a + IF((shiftright(h, i) & 1L) = 1L, 1, -1))
-    ),
-    sequence(0, 63),
-    (s, i) -> IF(s > 0, shiftleft(1L, i), 0L)
-  ),
-  0L,
-  (acc, v) -> acc | v
-)
-"""
-
-
-def simhash64(col_name: str) -> Column:
-    """64-bit SimHash of normalized whitespace tokens of column ``col_name``.
-
-    Per token: xxhash64 → 64 sign contributions; per document: sum per bit,
-    bit set where the sum is positive.  Nested SQL transforms/aggregates —
-    no shuffle, no Python.
-    """
-    return F.expr(_SIMHASH_SQL.format(c=col_name))
-
-
-#: 60-bit SimHash over md5-derived token hashes.  Same algorithm as
-#: :data:`_SIMHASH_SQL` but the token hash is the first 15 hex chars of
-#: md5 parsed as an integer — which DuckDB reproduces exactly
-#: (``CAST('0x'||substr(md5(t),1,15) AS UBIGINT)``), so the WHOLE simhash
-#: pipeline gets a value-level oracle; the xxhash64 form stays the
-#: production fast path (one JVM hash vs an md5 + base conversion).
+#: 60-bit SimHash over md5-derived token hashes.  Per token: the first
+#: 15 hex chars of md5 parsed as an integer — which DuckDB reproduces
+#: exactly (``CAST('0x'||substr(md5(t),1,15) AS UBIGINT)``), so the WHOLE
+#: simhash pipeline gets a value-level oracle — then 60 sign
+#: contributions; per document: sum per bit, bit set where the sum is
+#: positive.  SQL-lambda form because the Python ``shiftright`` wrapper
+#: only takes a literal int shift; SQL ``shiftright(expr, expr)`` shifts
+#: by a column.  md5 token hashes cost no measurable wall against
+#: xxhash64 (PERFORMANCE.md).
 _SIMHASH_MD5_SQL = """
 aggregate(
   zip_with(
@@ -563,9 +492,13 @@ aggregate(
 
 
 def simhash60_md5(col_name: str) -> Column:
-    """Oracle-reproducible 60-bit SimHash (md5 token hashes) — see
-    :data:`_SIMHASH_MD5_SQL`."""
+    """Oracle-reproducible 60-bit SimHash of normalized whitespace tokens
+    of column ``col_name`` — see :data:`_SIMHASH_MD5_SQL`.  Nested SQL
+    transforms/aggregates: no shuffle, no Python."""
     return F.expr(_SIMHASH_MD5_SQL.format(c=col_name))
+
+
+_SIMHASH_BITS = 60
 
 
 def simhash_pairs(
@@ -574,10 +507,9 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     bands: int = 4,
-    sig: Column | None = None,
-    sig_bits: int = 64,
 ) -> DataFrame:
-    """Pairs with SimHash Hamming distance ≤ ``max_hamming``.
+    """Pairs whose :func:`simhash60_md5` signatures are within Hamming
+    distance ``max_hamming``.
 
     Pigeonhole banding: with ``bands`` equal-width chunks, any pair within
     Hamming distance < bands shares at least one exact chunk — candidates
@@ -587,29 +519,29 @@ def simhash_pairs(
     for every parameterization, ``bands`` is widened to
     ``max_hamming + 1`` when the caller passes fewer (bits outside the
     banded region only ever ADD candidates, so partial band coverage at
-    high ``bands`` never loses a pair).  ``max_hamming ≥ sig_bits`` would
+    high ``bands`` never loses a pair).  ``max_hamming ≥ 60`` would
     need 1-bit bands and matches everything — rejected.
-
-    ``sig``/``sig_bits`` override the signature expression (default
-    64-bit xxhash64 simhash; pass :func:`simhash60_md5` with 60 for the
-    oracle-reproducible form).
     """
-    if max_hamming >= sig_bits:
+    sigs = fan_out(df.select(id_col, text_col)).select(
+        F.col(id_col), simhash60_md5(text_col).alias("simhash")
+    )
+    return _simhash_band_pairs(sigs, id_col, max_hamming, bands)
+
+
+def _simhash_band_pairs(
+    sigs: DataFrame, id_col: str, max_hamming: int, bands: int
+) -> DataFrame:
+    """Banding + verify step of :func:`simhash_pairs` over an
+    ``(id_col, simhash)`` frame of 60-bit signatures."""
+    if max_hamming >= _SIMHASH_BITS:
         raise ValueError(
-            f"max_hamming={max_hamming} >= sig_bits={sig_bits}: every pair "
-            "matches; filter on nothing instead"
+            f"max_hamming={max_hamming} >= {_SIMHASH_BITS} signature bits: "
+            "every pair matches; filter on nothing instead"
         )
     bands = max(bands, max_hamming + 1)
-    width = sig_bits // bands
+    width = _SIMHASH_BITS // bands
     mask = (1 << width) - 1
-    sigs = persisted(
-        fan_out(df.select(id_col, text_col)).select(
-            F.col(id_col),
-            (sig if sig is not None else simhash64(text_col)).alias("simhash"),
-        ),
-        "signatures",
-    )
-
+    sigs = persisted(sigs, "signatures")
     banded = sigs.select(
         F.col(id_col),
         F.col("simhash"),
@@ -1257,7 +1189,6 @@ def paragraph_neardup(
         num_perm=num_perm,
         bands=bands,
         threshold=threshold,
-        sig_fn=minhash_signatures_md5,
     )
     oa = reps.select(
         F.col("_key").alias("id_a"),

@@ -104,7 +104,7 @@ def test_minhash_estimate_tracks_exact_jaccard(docs):
 def test_simhash_identical_and_near(docs, spark):
     sigs = {
         r["doc_id"]: r["s"]
-        for r in docs.select("doc_id", D.simhash64("text").alias("s")).collect()
+        for r in docs.select("doc_id", D.simhash60_md5("text").alias("s")).collect()
     }
     assert sigs[1] == sigs[2] == sigs[3]   # normalization-equal → same signature
     ham14 = bin(sigs[1] ^ sigs[4]).count("1")
@@ -196,19 +196,20 @@ def test_simhash_bands_widen_keeps_contract(spark):
     """max_hamming >= bands previously dropped in-range pairs silently;
     bands now auto-widen so the output equals the exact Hamming filter."""
     from nlp_to_nosql_spark.operators import dedup as dd
-    from pyspark.sql import functions as F
 
-    # Signatures injected directly: ids 1,2 differ in 8 bits spread 2 per
-    # 16-bit chunk (no shared chunk at bands=4), within max_hamming=10.
-    sig_a = 0
+    # 60-bit signatures injected through the banding helper: ids 1,2
+    # differ in 8 bits spread 2 per 15-bit chunk (no shared chunk at
+    # bands=4), within max_hamming=10.
     sig_b = 0
     for chunk in range(4):
-        sig_b |= 0b11 << (chunk * 16)
-    df = spark.createDataFrame([(1, "x"), (2, "y")], "doc_id long, text string")
-    sig = F.when(F.col("doc_id") == 1, F.lit(sig_a)).otherwise(F.lit(sig_b))
-    out = dd.simhash_pairs(df, "doc_id", "text", max_hamming=10, bands=4, sig=sig)
+        sig_b |= 0b11 << (chunk * 15)
+    sigs = spark.createDataFrame([(1, 0), (2, sig_b)], "doc_id long, simhash long")
+    out = dd._simhash_band_pairs(sigs, "doc_id", max_hamming=10, bands=4)
     rows = out.collect()
     assert [(r["id_a"], r["id_b"], r["hamming"]) for r in rows] == [(1, 2, 8)]
+    # 60 bits would need 1-bit bands and match every pair: rejected.
+    with pytest.raises(ValueError, match="every pair"):
+        dd._simhash_band_pairs(sigs, "doc_id", max_hamming=60, bands=4)
 
 
 def test_minhash_bands_validation(spark):

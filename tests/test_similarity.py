@@ -1,10 +1,13 @@
 """Similarity search: brute-force exactness vs numpy, LSH recall."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from nlp_to_nosql_spark.operators.similarity import RandomHyperplaneLSH, topk_bruteforce
+from nlp_to_nosql_spark.operators.similarity import IntSRPLSH, topk_bruteforce
+from nlp_to_nosql_spark.sources.catalog import DEFAULT_SF_DIR, register_tables
 
 DIM = 16
 N = 200
@@ -61,27 +64,77 @@ def test_scale_invariance(vec_df, vectors):
 
 def test_lsh_recall_on_neighbors(vec_df, vectors):
     q = [float(x) for x in vectors[0]]
-    lsh = RandomHyperplaneLSH(dim=DIM, nbits=12, seed=42)
+    lsh = IntSRPLSH(dim=DIM, nbits=12, seed=42)
     approx = [r["vec_id"] for r in lsh.topk(vec_df, q, k=5, max_hamming=3).collect()]
     # the planted near-dups of vector 0 must be found
     assert 0 in approx and 1 in approx and 2 in approx
 
 
 def test_lsh_signature_column_matches_driver_side(vec_df, vectors):
-    lsh = RandomHyperplaneLSH(dim=DIM, nbits=12, seed=42)
+    lsh = IntSRPLSH(dim=DIM, nbits=12, seed=42)
     rows = lsh.add_signatures(vec_df).select("vec_id", "sign_bits").collect()
     for r in rows[:20]:
         assert r["sign_bits"] == lsh.signature_of(vectors[r["vec_id"]])
 
 
 def test_lsh_neardup_pairs(vec_df):
-    lsh = RandomHyperplaneLSH(dim=DIM, nbits=12, seed=42)
+    lsh = IntSRPLSH(dim=DIM, nbits=12, seed=42)
     pairs = {
         (r["id_a"], r["id_b"]): r["cos_sim"]
         for r in lsh.neardup_pairs(vec_df, threshold=0.98).collect()
     }
     assert (0, 1) in pairs and (0, 2) in pairs and (1, 2) in pairs
     assert all(v >= 0.98 for v in pairs.values())
+
+
+@pytest.fixture(scope="module")
+def emb(spark):
+    """The sf0.01 embeddings table (500 vectors) beside the default data."""
+    sf_dir = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.01")
+    return register_tables(spark, sf_dir)["embeddings"]
+
+
+def test_sign_lsh_full_probe_equals_bruteforce(emb):
+    """ann2's search tier IS ann1 at full probe: with max_hamming = nbits
+    every signature qualifies, so the candidate set is the corpus and the
+    shared scoring tier must reproduce brute force exactly (ids, order,
+    and cosine values)."""
+    q_row = emb.filter("vec_id = 0").select("embedding").first()
+    q = [float(x) for x in q_row["embedding"]]
+    lsh = IntSRPLSH(dim=len(q), nbits=16, seed=42)
+    got = [
+        (r["vec_id"], r["cos_sim"])
+        for r in lsh.topk(emb, q, k=10, max_hamming=16).collect()
+    ]
+    want = [
+        (r["vec_id"], r["cos_sim"]) for r in topk_bruteforce(emb, q, k=10).collect()
+    ]
+    assert got == want
+
+
+def test_sign_lsh_partial_probe_recall_and_exact_scores(emb):
+    """At ann2's parameters (nbits=16, max_hamming=6) the LSH tier must
+    keep majority recall against ann1, find the query itself, and —
+    because candidates are scored by the same exact kernel — every
+    returned cosine must equal its brute-force value."""
+    q_row = emb.filter("vec_id = 0").select("embedding").first()
+    q = [float(x) for x in q_row["embedding"]]
+    lsh = IntSRPLSH(dim=len(q), nbits=16, seed=42)
+    got = {
+        r["vec_id"]: r["cos_sim"]
+        for r in lsh.topk(emb, q, k=10, max_hamming=6).collect()
+    }
+    exact_all = {
+        r["vec_id"]: r["cos_sim"]
+        for r in topk_bruteforce(emb, q, k=emb.count()).collect()
+    }
+    want10 = {
+        r["vec_id"] for r in topk_bruteforce(emb, q, k=10).collect()
+    }
+    assert 0 in got  # the query vector itself is its own nearest neighbor
+    assert len(set(got) & want10) >= 5  # observed 7/10 on this dataset
+    for vid, cos in got.items():
+        assert cos == exact_all[vid]  # scoring tier is exact, only recall is approx
 
 
 def test_embedding_neardup_exact(vec_df, vectors):
@@ -368,7 +421,7 @@ def test_matryoshka_truncation_recall(spark):
     from pyspark.sql import functions as F
 
     from nlp_to_nosql_spark.operators.similarity import topk_bruteforce
-    from nlp_to_nosql_spark.sources.catalog import register_tables
+    from nlp_to_nosql_spark.sources.catalog import DEFAULT_SF_DIR, register_tables
 
     sf_dir = "/root/testdata/sf0.01"
     if not os.path.isdir(sf_dir):

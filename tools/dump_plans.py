@@ -42,6 +42,14 @@ def _executions_since(spark, min_id: int) -> list:
     return out
 
 
+def _side_header(eid: int, desc: str | None) -> str:
+    """Section header for one side execution: its id and the first line
+    of its description (Spark leaves the description empty or null for
+    executions no job group or action named)."""
+    first = next(iter((desc or "").splitlines()), "")
+    return f"\n\n=== side execution {eid}: {first[:120]} ===\n"
+
+
 def _last_execution_id(spark) -> int:
     seq = spark._jsparkSession.sharedState().statusStore().executionsList()
     return seq.apply(seq.size() - 1).executionId() if seq.size() else -1
@@ -83,10 +91,7 @@ def main() -> int:
             if side:
                 df.write.mode("overwrite").format("noop").save()
                 for eid, desc, plan in _executions_since(spark, before_id):
-                    f.write(
-                        f"\n\n=== side execution {eid}: "
-                        f"{(desc or '').splitlines()[0][:120]} ===\n"
-                    )
+                    f.write(_side_header(eid, desc))
                     f.write(plan)
                 spark.catalog.clearCache()
         print(f"wrote {path}")
