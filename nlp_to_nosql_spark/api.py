@@ -61,15 +61,21 @@ class Engine:
         """End-to-end NL query with the reference's response envelope
         (``app_server.py:258-268``) and layered budget (R2)."""
         start = time.time()
-        _, db_budget = budget_split(timeout_s)
+        gen_budget, db_budget = budget_split(timeout_s)
+        # One deadline for the request: compile time past its budget comes
+        # out of the DB stage, whose collect and count share the rest.
+        deadline = start + max(gen_budget, 0.0) + db_budget
 
         gen_start = time.time()
         spec = self.compile(nl_text, limit=limit)
         gen_time = time.time() - gen_start
 
         db_start = time.time()
-        total, rows = execute(
-            self.spark, spec, self.table(table), query_timeout_s=db_budget
+        total, rows, count_exact = execute(
+            self.spark,
+            spec,
+            self.table(table),
+            query_timeout_s=min(db_budget, deadline - db_start),
         )
         db_time = time.time() - db_start
 
@@ -77,6 +83,7 @@ class Engine:
             "ok": True,
             "query": spec.to_ir(),
             "total_matching": total,
+            "count_exact": count_exact,
             "result_count": len(rows),
             "results": rows,
             "execution_time": round(time.time() - start, 3),
@@ -86,10 +93,12 @@ class Engine:
         }
 
     def test_connections(self) -> dict[str, bool]:
-        """Health probe analogue of ``No_Sql.py:447-482``."""
+        """Health probe analogue of ``No_Sql.py:447-482``.  The Spark probe
+        is a catalog round-trip: it launches no job, and works on classic
+        and Connect sessions alike."""
         ok = {"spark": False, "compiler": False}
         try:
-            self.spark.range(1).count()
+            self.spark.catalog.currentDatabase()
             ok["spark"] = True
         except Exception:
             pass

@@ -7,13 +7,19 @@ Reference behavior (``No_Sql.py:379-439``):
    because limit ≤ 1000);
 3. exact filtered count with a time budget, metadata fast path on the empty
    filter, degradation to ``len(results)`` on failure (A1-A3,
-   ``No_Sql.py:413-421``);
+   ``No_Sql.py:413-421``) — skipped when the limited collect comes back
+   short: a ``limit(n)`` collect that returns fewer than ``n`` rows has
+   seen every matching row, so ``len(rows)`` is already the exact count;
 4. per-row JSON sanitization: keep JSON-serializable values, stringify the
    rest (F1, ``No_Sql.py:424-433``).
 
-The count and the collect share one filtered relation, so at 100 TB the
-scan is a single-stage parquet read with the predicate pushed down; the
-count never collects rows to the driver.
+The count and the collect share one filtered relation and one deadline,
+so at 100 TB the scan is a single-stage parquet read with the predicate
+pushed down; the count never collects rows to the driver and gets only
+what the collect left of the budget.  A selective request runs one Spark
+job.  ``count_exact`` says whether ``total_matching`` is exact (count
+skipped or completed) or the degraded lower bound ``len(rows)`` (count
+failed, timed out or had no budget left).
 """
 
 from __future__ import annotations
@@ -27,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from nlp_to_nosql_spark.ir import QuerySpec
 from nlp_to_nosql_spark.plans.compile import apply_spec
-from nlp_to_nosql_spark.timeout import run_with_timeout
+from nlp_to_nosql_spark.timeout import QueryTimeoutError, run_with_timeout
 
 logger = logging.getLogger(__name__)
 
@@ -56,11 +62,14 @@ def execute(
     df: DataFrame,
     query_timeout_s: float = QUERY_TIMEOUT_S,
     count_timeout_s: float = COUNT_TIMEOUT_S,
-) -> tuple[int, list[dict[str, Any]]]:
-    """Run a QuerySpec against ``df``; return ``(total_matching, rows)``.
+) -> tuple[int, list[dict[str, Any]], bool]:
+    """Run a QuerySpec against ``df``; return
+    ``(total_matching, rows, count_exact)``.
 
     ``total_matching`` is the pre-limit filtered count; ``rows`` are at most
-    ``spec.limit`` sanitized dicts.
+    ``spec.limit`` sanitized dicts.  ``query_timeout_s`` bounds the collect
+    and the count together; the count gets at most ``count_timeout_s`` of
+    what remains.
     """
     # One source of truth for the filter→project plan; the count below
     # runs on the same relation (projection never changes row count, and
@@ -68,6 +77,7 @@ def execute(
     projected = apply_spec(df, spec, with_limit=False)
 
     start = time.time()
+    deadline = start + query_timeout_s
     collected = run_with_timeout(
         spark,
         lambda: projected.limit(spec.limit).collect(),
@@ -79,21 +89,26 @@ def execute(
     )
 
     rows = [sanitize_row(r.asDict(recursive=True)) for r in collected]
+    if len(collected) < spec.limit:
+        return len(rows), rows, True
 
     # Count path: exact filtered count with degradation (A1-A3).  On the
     # empty filter this is Spark's parquet row-group metadata count — the
     # analogue of Mongo's estimated_document_count fast path, but exact.
     try:
+        remaining = deadline - time.time()
+        if remaining <= 0:
+            raise QueryTimeoutError("no budget left for the count")
         count_start = time.time()
         total = run_with_timeout(
             spark,
             projected.count,
-            timeout_s=count_timeout_s,
+            timeout_s=min(count_timeout_s, remaining),
             group_desc="execute:count",
         )
         logger.info("count took %.2fs", time.time() - count_start)
     except Exception as exc:  # degraded lower bound (No_Sql.py:419-421)
         logger.warning("count failed/timed out (%s); degrading to len(results)", exc)
-        total = len(rows)
+        return len(rows), rows, False
 
-    return total, rows
+    return total, rows, True

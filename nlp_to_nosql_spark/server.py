@@ -75,6 +75,8 @@ class QueryResponse(BaseModel):
     ok: bool
     mongo_query: dict
     total_matching: int
+    # False when total_matching is the degraded lower bound len(results).
+    count_exact: bool
     results: list
     result_count: int
     execution_time: float
@@ -246,6 +248,7 @@ def create_app(engine: Engine, table_resolver=None):
                     ok=True,
                     mongo_query=resp["query"],
                     total_matching=resp["total_matching"],
+                    count_exact=resp["count_exact"],
                     results=resp["results"],
                     result_count=resp["result_count"],
                     execution_time=resp["execution_time"],

@@ -13,19 +13,19 @@ def test_total_is_prelimit_count(spark, employees):
     spec = QuerySpec(filter={"salary": {"$gt": 40000}}, limit=2)
     # generous budgets: this test asserts the exact count, so it must not
     # hit the (by-design) degradation path on a cold JVM
-    total, rows = execute(spark, spec, employees, query_timeout_s=120, count_timeout_s=120)
+    total, rows, _ = execute(spark, spec, employees, query_timeout_s=120, count_timeout_s=120)
     assert len(rows) == 2
     assert total == 9  # all but Ivy (39999)
 
 
 def test_empty_filter_count_fast_path(spark, employees):
-    total, rows = execute(spark, QuerySpec(limit=1000), employees)
+    total, rows, _ = execute(spark, QuerySpec(limit=1000), employees)
     assert total == 10 and len(rows) == 10
 
 
 def test_projection_in_rows(spark, employees):
     spec = QuerySpec(filter={}, projection=("name",), limit=1000)
-    _, rows = execute(spark, spec, employees)
+    _, rows, _ = execute(spark, spec, employees)
     assert all(set(r.keys()) == {"name"} for r in rows)
 
 
@@ -40,7 +40,7 @@ def test_timestamp_columns_sanitized(spark):
     df = spark.createDataFrame(
         [(1, datetime.datetime(2024, 5, 1, 12, 0, 0))], "id: long, ts: timestamp"
     )
-    _, rows = execute(spark, QuerySpec(limit=10), df)
+    _, rows, _ = execute(spark, QuerySpec(limit=10), df)
     assert isinstance(rows[0]["ts"], str)
 
 
@@ -56,8 +56,81 @@ def test_count_degradation_on_failure(spark, employees, monkeypatch):
         return real(spark_, action, timeout_s, group_desc)
 
     monkeypatch.setattr(ex, "run_with_timeout", flaky)
-    total, rows = execute(spark, QuerySpec(limit=3), employees)
+    total, rows, exact = execute(spark, QuerySpec(limit=3), employees)
     assert total == len(rows) == 3  # degraded to len(results)
+    assert exact is False
+
+
+def _recording_run_with_timeout(monkeypatch, collect_sleep_s=0.0):
+    """Patch the executor's guard: every action runs unguarded, the
+    collect then sleeps ``collect_sleep_s`` (a slow collect), and each call
+    is recorded as ``(group_desc, timeout_s, entered, returned)``."""
+    import time
+
+    import nlp_to_nosql_spark.executor as ex
+
+    calls = []
+
+    def recording(spark_, action, timeout_s, group_desc=""):
+        entered = time.time()
+        out = action()
+        if group_desc.startswith("execute:collect"):
+            time.sleep(collect_sleep_s)
+        calls.append((group_desc, timeout_s, entered, time.time()))
+        return out
+
+    monkeypatch.setattr(ex, "run_with_timeout", recording)
+    return calls
+
+
+def test_short_collect_skips_count(spark, employees, monkeypatch):
+    """Fewer rows than the limit: the collect saw every match, so
+    len(rows) is the exact total and no count job is launched."""
+    calls = _recording_run_with_timeout(monkeypatch)
+    spec = QuerySpec(filter={"salary": {"$gt": 40000}}, limit=50)
+    total, rows, exact = execute(spark, spec, employees)
+    assert [c[0] for c in calls] == ["execute:collect limit=50"]
+    assert total == len(rows) == 9 and exact is True
+
+
+def test_count_runs_when_matches_equal_limit(spark, employees, monkeypatch):
+    """Boundary: a full collect (matches == limit) cannot tell 9 matches
+    from 900, so the count still runs and returns the limit."""
+    calls = _recording_run_with_timeout(monkeypatch)
+    spec = QuerySpec(filter={"salary": {"$gt": 40000}}, limit=9)
+    total, rows, exact = execute(
+        spark, spec, employees, query_timeout_s=120, count_timeout_s=120
+    )
+    assert [c[0] for c in calls] == ["execute:collect limit=9", "execute:count"]
+    assert total == len(rows) == 9 and exact is True
+
+
+def test_count_gets_only_what_the_collect_left(spark, employees, monkeypatch):
+    """One request deadline: after a slow collect the count's budget is
+    min(COUNT_TIMEOUT_S, remaining), never a fresh fixed 3 s."""
+    from nlp_to_nosql_spark.executor import COUNT_TIMEOUT_S
+
+    calls = _recording_run_with_timeout(monkeypatch, collect_sleep_s=1.5)
+    eng = Engine(spark)
+    eng.register("emp_deadline", employees)
+    # timeout 5 → compile budget 0 s, DB budget 4 s (budget_split).
+    resp = eng.query("Find all employees", "emp_deadline", limit=3, timeout_s=5.0)
+    (_, _, collect_entered, collect_returned), (desc, count_timeout, _, _) = calls
+    assert desc == "execute:count"
+    assert count_timeout <= COUNT_TIMEOUT_S
+    assert count_timeout <= 4.0 - (collect_returned - collect_entered)
+    assert resp["total_matching"] == 10 and resp["count_exact"] is True
+
+
+def test_no_budget_left_degrades_without_count(spark, employees, monkeypatch):
+    """A collect that used the whole budget leaves nothing for the count:
+    no count job, len(rows) as a lower bound, count_exact false."""
+    calls = _recording_run_with_timeout(monkeypatch, collect_sleep_s=0.6)
+    total, rows, exact = execute(
+        spark, QuerySpec(limit=3), employees, query_timeout_s=0.5
+    )
+    assert [c[0] for c in calls] == ["execute:collect limit=3"]
+    assert total == len(rows) == 3 and exact is False
 
 
 def test_engine_envelope(spark, employees):
@@ -67,6 +140,7 @@ def test_engine_envelope(spark, employees):
     assert resp["ok"] is True
     assert resp["query"] == {"filter": {"salary": {"$gt": 60000}}, "projection": {}}
     assert resp["total_matching"] == 5 and resp["result_count"] == 5
+    assert resp["count_exact"] is True
     assert {"execution_time", "query_generation_time", "db_execution_time"} <= set(resp)
 
 

@@ -60,6 +60,15 @@ def test_root_and_health(client):
     assert health["spark_connected"] and health["compiler_connected"]
 
 
+def test_health_launches_no_spark_job(client, spark):
+    """GET /health is a liveness probe, not a query: it must not
+    dispatch a Spark job."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.numTotalJobs()
+    assert client.get("/health").get_json()["spark_connected"] is True
+    assert dag.numTotalJobs() == before
+
+
 def test_test_endpoint_round_trip(client):
     body = client.get("/test").get_json()
     assert body["status"] == "ok"
@@ -76,6 +85,7 @@ def test_query_happy_path_envelope(client):
     assert body["ok"] is True
     assert body["result_count"] == 5
     assert body["total_matching"] == 150
+    assert body["count_exact"] is True
     assert body["mongo_query"] == {"filter": {}, "projection": {}}
     assert len(body["results"]) == 5
     assert body["timeout_used"] == 30  # default
